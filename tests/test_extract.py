@@ -3,8 +3,9 @@
 import pandas as pd
 import pytest
 
+import oracle_ref
 from timberjack_spark.fixtures import transcripts_pandas
-from timberjack_spark.functions.extract import with_parsed
+from timberjack_spark.functions.extract import MODES, with_parsed
 from timberjack_spark.functions.grok import grok_batch, with_parsed_pandas
 
 EDGE_LINES = [
@@ -33,6 +34,16 @@ EDGE_LINES = [
     '\xa0{"level":"WARN","message":"nbsp-framed json"}\xa0',
     '\x1c{"level":"WARN","message":"fs-framed non-json"}\x1c',
     "2025-03-21 14:00:00 [ERROR] tab]\tmsg key needs trim\x1c",
+    # error_type lookbehind edges (a match never starts mid letter-run) and
+    # level derivation from the single LEVEL_RE group-0 match
+    "xConnection timeout while dialing",
+    "FooBarException thrown",
+    "bare Exception only",
+    "ExceptionFooException nested",
+    "a500 Internal Server Error from upstream",
+    "OutOfMemoryError: heap space",
+    "[warning] lowercase long bracket",
+    "WARNING: long colon form",
 ]
 
 
@@ -56,10 +67,13 @@ def test_iso_timestamp_not_matched_by_generic_regex(edges):
 
 def test_colon_form_keeps_colon_uppercased(edges):
     assert edges["error: lowercase colon form"]["level"] == "ERROR:"
+    assert edges["WARNING: long colon form"]["level"] == "WARNING:"
+    assert edges["OutOfMemoryError: heap space"]["level"] == "ERROR:"
 
 
 def test_bracket_lowercase_uppercased(edges):
     assert edges["[info] lowercase bracket form"]["level"] == "INFO"
+    assert edges["[warning] lowercase long bracket"]["level"] == "WARNING"
 
 
 def test_leftmost_alternative_wins(edges):
@@ -111,6 +125,29 @@ def test_error_type_leftmost(edges):
     assert edges["Connection timeout in NetworkClient.java:86"]["error_type"] == "Connection timeout"
     # leftmost match: "rate limit..." is not in ERROR_TYPE_RE; OutOfMemoryError matches [A-Za-z]+Error
     assert edges["API rate limit exceeded plus OutOfMemoryError later"]["error_type"] == "OutOfMemoryError"
+    # a match never starts mid letter-run, so the JVM pattern's lookbehind
+    # changes nothing: it only skips offsets that cannot be leftmost
+    assert edges["xConnection timeout while dialing"]["error_type"] == "xConnection timeout"
+    assert edges["FooBarException thrown"]["error_type"] == "FooBarException"
+    assert edges["bare Exception only"]["error_type"] == ""
+    assert edges["ExceptionFooException nested"]["error_type"] == "ExceptionFooException"
+    assert edges["a500 Internal Server Error from upstream"]["error_type"] == "500 Internal Server Error"
+    assert edges["OutOfMemoryError: heap space"]["error_type"] == "OutOfMemoryError"
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_modes_match_python_reference_on_edges(spark, mode):
+    """Every mode runs the same staged projection; pin each against the
+    line-at-a-time reference on the edge lines."""
+    df = spark.createDataFrame([(t,) for t in EDGE_LINES], "text string")
+    got = {r["text"]: tuple(r)[1:] for r in with_parsed(df, mode=mode).collect()}
+    for ln in EDGE_LINES:
+        p = oracle_ref.parse_line(ln, mode)
+        ts = oracle_ref.extract_ts(ln, p["ts"])
+        em = oracle_ref.ERR_RE.search(ln)
+        want = (oracle_ref.extract_level(ln, p["level"]), ts, ts[:13], p["message"],
+                em.group(1) if em else "", oracle_ref.msg_key(ln))
+        assert got[ln] == want, ln
 
 
 def test_grok_batch_matches_expr_on_edges(spark):

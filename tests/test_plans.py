@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from timberjack_spark.fixtures import dim_role_df, dim_tool_df, transcripts_path
-from timberjack_spark.functions.extract import with_parsed
+from timberjack_spark.functions.extract import MODES, with_parsed
+from timberjack_spark.functions.patterns import LEVEL_RE, TIMESTAMP_RE
 from timberjack_spark.operators.analyze import LogQuery, matched
 from timberjack_spark.operators.enrich import enrich
 from timberjack_spark.operators.route import with_category
@@ -42,6 +43,31 @@ def test_enrich_joins_are_broadcast(spark, src):
     plan = plan_of(e.groupBy("category").count())
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
+
+
+def test_flagship_parse_evaluates_each_regex_once(spark, src):
+    """One LEVEL_RE scan and one is_jsonish trim per row. Subexpression
+    elimination does not share expressions inside CASE WHEN branches, so a
+    flat projection repeats them; the staged projection in with_parsed must
+    keep each in a Project of its own."""
+    e = enrich(with_category(with_parsed(src)), dim_role_df(spark), dim_tool_df(spark))
+    plan = plan_of(e.groupBy("category", "level").count())
+    assert plan.count(LEVEL_RE) == 1
+    assert plan.count("StartsWith(trim(") == 1
+    assert "ArrowEvalPython" not in plan
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_level_regex_once_in_every_mode(spark, src, mode):
+    plan = plan_of(with_parsed(src, mode=mode).groupBy("level", "bucket").count())
+    assert plan.count(LEVEL_RE) == 1
+    assert plan.count(TIMESTAMP_RE) == 1
+
+
+def test_report_spine_stays_in_the_jvm(spark, src):
+    plan = plan_of(matched(src, LogQuery(show_unique=True)))
+    assert plan.count(LEVEL_RE) == 1
+    assert "ArrowEvalPython" not in plan
 
 
 def test_aggregation_is_partial_then_final(spark, src):

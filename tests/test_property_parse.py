@@ -3,15 +3,18 @@ through the Spark expression path must match the pure-Python reference oracle
 (tests/oracle_ref.py) — the same function family the DuckDB driver oracle
 mirrors, so this fuzzes the space between the pinned example tests."""
 
+import functools
 import json
 import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 import oracle_ref
-from timberjack_spark.functions.extract import with_parsed
+from timberjack_spark.functions.extract import MODES, with_parsed
 
 MAX_EXAMPLES = int(os.environ.get("FUZZ_EXAMPLES", "30"))
 
@@ -21,7 +24,11 @@ WORDS = ["Cache", "miss", "user_42", "Connection", "timeout", "NullPointerExcept
          "served", "rate", "limit", "[x]", "]", "[", "{", "}", ":", "a.b",
          # non-ASCII Unicode whitespace: the round-2 fuzzer alphabet was
          # ASCII-only and could not see the ws_trim divergence ADVICE flagged
-         "\xa0", "\u2028", "\u3000"]
+         "\xa0", "\u2028", "\u3000",
+         # lookbehind edges of the JVM error_type twin (a match never starts
+         # mid letter-run) and level derivation from the single LEVEL_RE match
+         "xConnection timeout", "FooBarException", "Exception", "ExceptionFooException",
+         "a500 Internal Server Error", "OutOfMemoryError:", "[warning]", "WARNING:"]
 
 line_st = st.one_of(
     # bracketed-level generic lines
@@ -57,22 +64,29 @@ line_st = st.one_of(
 @settings(max_examples=MAX_EXAMPLES, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(line_st, min_size=1, max_size=25))
 def test_parse_matches_python_reference(spark, lines):
+    """Every parse mode (all run the same staged projection) on the same
+    generated lines, in one Spark job."""
     lines = [ln for ln in lines if len(ln) > 0]
     if not lines:
         return
     df = spark.createDataFrame([(ln,) for ln in lines], "text string")
-    cols = ["text", "level", "bucket", "message", "error_type", "msg_key"]
-    got = {tuple(r[c] for c in cols) for r in with_parsed(df).select(*cols).collect()}
+    cols = ["text", "level", "ts_raw", "bucket", "message", "error_type", "msg_key"]
+    union = functools.reduce(
+        DataFrame.unionAll,
+        [with_parsed(df, mode=m).select(F.lit(m).alias("mode"), *cols) for m in MODES],
+    )
+    got = {tuple(r) for r in union.collect()}
     want = set()
-    for ln in lines:
-        parsed = oracle_ref.parse_line(ln, "auto")
-        level = oracle_ref.extract_level(ln, parsed.get("level"))
-        ts = oracle_ref.extract_ts(ln, parsed.get("ts"))
-        em = oracle_ref.ERR_RE.search(ln)
-        want.add(
-            (ln, level, ts[:13], parsed["message"],
-             em.group(1) if em else "", oracle_ref.msg_key(ln))
-        )
+    for mode in MODES:
+        for ln in lines:
+            parsed = oracle_ref.parse_line(ln, mode)
+            level = oracle_ref.extract_level(ln, parsed.get("level"))
+            ts = oracle_ref.extract_ts(ln, parsed.get("ts"))
+            em = oracle_ref.ERR_RE.search(ln)
+            want.add(
+                (mode, ln, level, ts, ts[:13], parsed["message"],
+                 em.group(1) if em else "", oracle_ref.msg_key(ln))
+            )
     assert got == want
 
 

@@ -41,17 +41,6 @@ def _json_path(key: str) -> str:
     return f"$['{key}']" if not key.replace("_", "").replace(".", "").isalnum() else f"$.{key}"
 
 
-def json_first(text: Column, keys: list[str]) -> Column:
-    """First-present-key JSON lookup (null when none / malformed JSON).
-
-    The lookup parses the ws-TRIMMED text: the reference trims (Rust
-    str::trim) before serde-parsing, and Jackson rejects JSON framed by
-    non-JSON whitespace (NBSP etc.) that ws_trim strips — parity pinned by
-    the grok/extract edge test and the fuzzer."""
-    t = ws_trim(text)
-    return F.coalesce(*[F.get_json_object(t, _json_path(k)) for k in keys])
-
-
 # Unicode White_Space — the exact set Rust's str::trim (the reference,
 # src/analyzer.rs / parser) strips. Round 2 trimmed only the 6 ASCII
 # whitespace chars, which diverged BOTH from the reference and from the
@@ -70,27 +59,19 @@ def ws_trim(col: Column) -> Column:
     return F.btrim(col, F.lit(_WS))
 
 
-def generic_level(text: Column) -> Column:
-    """Level via LEVEL_RE: bracket form -> captured word; colon form -> whole
-    match including the colon; both uppercased; '' when no match.
-
-    Kept as two regexp_extract calls on the same pattern: codegen's common
-    subexpression elimination shares the match, and measured A/B showed the
-    'clever' single-scan strip-the-brackets variant 15% SLOWER (CSE misses the
-    extra m0 references)."""
-    m0 = F.regexp_extract(text, LEVEL_RE, 0)
-    m1 = F.regexp_extract(text, LEVEL_RE, 1)
-    return F.when(m0 == "", F.lit("")).otherwise(F.upper(F.when(m1 == "", m0).otherwise(m1)))
-
-
-def generic_timestamp(text: Column) -> Column:
-    return F.regexp_extract(text, TIMESTAMP_RE, 1)
-
-
 # every ERROR_TYPE_RE alternative requires one of these case-sensitive literals,
 # so a cheap multi-contains prefilter (memchr-class, not regex) soundly skips
 # the regex on non-candidate rows
 _ERROR_TYPE_LITERALS = ["Exception", "Error", "timeout", "Unauthorized", "Unavailable"]
+
+
+# JVM-only twin of ERROR_TYPE_RE: each ``[A-Za-z]+...`` alternative may only
+# start at the beginning of a letter run. The leftmost match is unchanged — a
+# match starting mid-run implies one starting at the run's first letter — but
+# java.util.regex no longer retries every offset of a long letter run, each
+# retry re-consuming the rest of the run (O(run^2)). RE2 (the DuckDB oracle)
+# has no lookbehind and keeps the canonical pattern.
+_ERROR_TYPE_JVM_RE = ERROR_TYPE_RE.replace("[A-Za-z]+", "(?<![A-Za-z])[A-Za-z]+")
 
 
 def error_type(text: Column) -> Column:
@@ -98,7 +79,7 @@ def error_type(text: Column) -> Column:
     candidate = F.lit(False)
     for lit in _ERROR_TYPE_LITERALS:
         candidate = candidate | text.contains(lit)
-    return F.when(candidate, F.regexp_extract(text, ERROR_TYPE_RE, 1)).otherwise(F.lit(""))
+    return F.when(candidate, F.regexp_extract(text, _ERROR_TYPE_JVM_RE, 1)).otherwise(F.lit(""))
 
 
 def message_key(text: Column) -> Column:
@@ -118,86 +99,95 @@ def is_jsonish(text: Column) -> Column:
     return t.startswith("{") & t.endswith("}")
 
 
-def parsed_columns(text: Column, mode: str = "auto") -> dict[str, Column]:
-    """The engine's parse projection: level, ts_raw, bucket, message, error_type, msg_key."""
+def with_parsed(df: DataFrame, text_col: str = "text", mode: str = "auto") -> DataFrame:
+    """Append the parse projection (level, ts_raw, bucket, message, error_type,
+    msg_key) to ``df``; one staged projection serves every mode.
+
+    Each costly per-row value is a column of its own stage, computed once:
+
+    1. ``_js = is_jsonish(text)`` (auto mode), below the ``json_tuple``
+       Generate that extracts all 15 candidate JSON keys in ONE Jackson parse
+       of the trimmed text. The Generate's input is null on non-JSON rows, so
+       every ``_j*`` output is null there and "JSON wins" is just
+       ``coalesce(json_value, generic_value)``.
+    2. ``_lv0`` = ``LEVEL_RE`` group 0, null on rows where the JSON level wins,
+       and ``_ts`` = JSON timestamp else ``TIMESTAMP_RE`` group 1.
+    3. ``level`` comes from ``_lv0`` by string ops only (bracket form -> the
+       word inside, colon form -> the whole match, both uppercased; no second
+       regex scan); ``bucket`` is a prefix of ``_ts``.
+
+    The stages must stay separate Projects. A value that sits in a CASE WHEN
+    branch is only conditionally evaluated, and Catalyst's subexpression
+    elimination shares only expressions that some consumer always evaluates,
+    so a single flat projection re-ran the level regex for each of its
+    references. ``CollapseProject`` never inlines a non-cheap expression that
+    the stage above references more than once, so ``_lv0`` stays a column of
+    its own, and ``_ts`` is inlined only where one of ``ts_raw``/``bucket`` is
+    read; ``tests/test_plans.py`` pins one ``LEVEL_RE`` scan and one
+    ``is_jsonish`` trim per row.
+    """
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}")
-    g_level, g_ts = generic_level(text), generic_timestamp(text)
-    j_level = json_first(text, JSON_LEVEL_KEYS)
-    j_ts = json_first(text, JSON_TIMESTAMP_KEYS)
-    j_msg = json_first(text, JSON_MESSAGE_KEYS)
-
-    if mode == "generic":
-        level, ts_raw, message = g_level, g_ts, text
-    else:
-        use_json = F.lit(True) if mode == "json" else is_jsonish(text)
-        # analyzer.rs:230-245: parser level, else generic regex on the raw line.
-        level = F.when(use_json & j_level.isNotNull(), j_level).otherwise(g_level)
-        # analyzer.rs:274-281: parser ts, else generic regex on the raw line.
-        ts_raw = F.when(use_json & j_ts.isNotNull(), j_ts).otherwise(g_ts)
-        message = F.when(use_json & j_msg.isNotNull(), j_msg).otherwise(text)
-
-    bucket = F.substring(ts_raw, 1, BUCKET_LEN)
-    return {
-        "level": level,
-        "ts_raw": ts_raw,
-        "bucket": bucket,
-        "message": message,
-        "error_type": error_type(text),
-        "msg_key": message_key(text),
-    }
-
-
-def with_parsed(df: DataFrame, text_col: str = "text", mode: str = "auto") -> DataFrame:
-    """Append the parse projection to ``df``.
-
-    For the JSON-capable modes the 15 candidate keys are extracted with ONE
-    ``json_tuple`` (a single Jackson parse per row) instead of 15
-    ``get_json_object`` calls — the dominant cost of the parse stage on
-    JSON-heavy corpora. The rest is a single codegen projection, zero shuffles.
-    """
-    if mode == "generic":
-        return df.withColumns(parsed_columns(F.col(text_col), mode))
-
-    jt, cols, aliases = _json_parse_exprs(text_col, mode)
-    return df.select("*", jt).withColumns(cols).drop(*aliases)
+    pre, jt, stages, temps = _parse_stages(text_col, mode)
+    if pre:
+        df = df.withColumns(dict(pre))
+    if jt is not None:
+        df = df.select("*", jt)
+    for cols in stages:
+        df = df.withColumns(dict(cols))
+    return df.drop(*temps)
 
 
 @lru_cache(maxsize=8)
-def _json_parse_exprs(text_col: str, mode: str):
-    """Expression trees for the json/auto parse projection, built once per
+def _parse_stages(text_col: str, mode: str):
+    """Expression trees of the staged parse projection, built once per
     (text_col, mode) and reused across queries: Column objects are unresolved
     expressions bound to the process-wide py4j gateway (not a session), and
     constructing this tree costs hundreds of py4j round-trips — measurable
     driver-side serial time (~0.2 s) on every run of a parse query."""
+    text = F.col(text_col)
     keys = JSON_LEVEL_KEYS + JSON_TIMESTAMP_KEYS + JSON_MESSAGE_KEYS
-    aliases = tuple(f"_j{i}" for i in range(len(keys)))
-    # parse the TRIMMED text (see json_first: reference trims before serde).
-    # In auto mode the json_tuple INPUT is additionally gated on is_jsonish:
-    # its outputs are only ever consumed under `use_json` anyway, and a null
-    # input skips the Jackson parse attempt entirely — on a 7.7%-JSON corpus
-    # the JSON stage measured 8-13 s ungated vs 2.5 s gated per 24M rows
-    # (Jackson charges for every failed parse of a generic line).
-    text = F.col(text_col)
-    jt_input = ws_trim(text) if mode == "json" else F.when(is_jsonish(text), ws_trim(text))
-    jt = F.json_tuple(jt_input, *keys).alias(*aliases)
+    json_cols = {} if mode == "generic" else {k: f"_j{i}" for i, k in enumerate(keys)}
+    pre: dict[str, Column] = {}
+    jt = None
+    if json_cols:
+        # Jackson parses the TRIMMED text: the reference trims (Rust str::trim)
+        # before serde-parsing, and Jackson rejects JSON framed by non-JSON
+        # whitespace (NBSP etc.) that ws_trim strips. In auto mode the input
+        # is gated on is_jsonish: a null input skips the parse attempt — on a
+        # 7.7%-JSON corpus the JSON stage measured 8-13 s ungated vs 2.5 s
+        # gated per 24M rows (Jackson charges for every failed parse).
+        if mode == "json":
+            jt_input = ws_trim(text)
+        else:
+            pre["_js"] = is_jsonish(text)
+            jt_input = F.when(F.col("_js"), ws_trim(text))
+        jt = F.json_tuple(jt_input, *json_cols).alias(*json_cols.values())
 
-    def first(kset: list[str]) -> Column:
-        return F.coalesce(*[F.col(aliases[keys.index(k)]) for k in kset])
+    # analyzer.rs:230-245 / 274-281: parser level/ts/message (first present
+    # key), else the generic extraction on the raw line. Generic mode has no
+    # _j columns, and coalesce(generic) is generic.
+    def json_or(kset: list[str], generic: Column) -> Column:
+        return F.coalesce(*[F.col(json_cols[k]) for k in kset if k in json_cols], generic)
 
-    text = F.col(text_col)
-    g_level, g_ts = generic_level(text), generic_timestamp(text)
-    j_level, j_ts, j_msg = first(JSON_LEVEL_KEYS), first(JSON_TIMESTAMP_KEYS), first(JSON_MESSAGE_KEYS)
-    use_json = F.lit(True) if mode == "json" else is_jsonish(text)
-    level = F.when(use_json & j_level.isNotNull(), j_level).otherwise(g_level)
-    ts_raw = F.when(use_json & j_ts.isNotNull(), j_ts).otherwise(g_ts)
-    message = F.when(use_json & j_msg.isNotNull(), j_msg).otherwise(text)
-    cols = {
-        "level": level,
-        "ts_raw": ts_raw,
-        "bucket": F.substring(ts_raw, 1, BUCKET_LEN),
-        "message": message,
+    json_level = json_or(JSON_LEVEL_KEYS, F.lit(None))
+    stage2 = {
+        "_lv0": F.when(json_level.isNull(), F.regexp_extract(text, LEVEL_RE, 0)),
+        "_ts": json_or(JSON_TIMESTAMP_KEYS, F.regexp_extract(text, TIMESTAMP_RE, 1)),
+    }
+    m0 = F.col("_lv0")
+    # bracket form "[word]" -> word; colon form "word:" keeps the colon; "" -> ""
+    generic_level = F.upper(
+        F.when(m0.startswith("["), m0.substr(F.lit(2), F.length(m0) - 2)).otherwise(m0)
+    )
+    stage3 = {
+        "level": json_or(JSON_LEVEL_KEYS, generic_level),
+        "ts_raw": F.col("_ts"),
+        "bucket": F.substring(F.col("_ts"), 1, BUCKET_LEN),
+        "message": json_or(JSON_MESSAGE_KEYS, text),
         "error_type": error_type(text),
         "msg_key": message_key(text),
     }
-    return jt, cols, aliases
+    # cached and shared by every caller: hand out immutable (name, column) pairs
+    temps = (*pre, *json_cols.values(), *stage2)
+    return tuple(pre.items()), jt, (tuple(stage2.items()), tuple(stage3.items())), temps

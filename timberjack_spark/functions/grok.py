@@ -7,10 +7,14 @@ over the strings. Regexes are compiled once per executor (module import), and
 all string work is ``pd.Series.str`` / batch-level, never a per-row Spark UDF.
 
 Output is pinned by test to be identical to the pure-Catalyst projection in
-:mod:`timberjack_spark.functions.extract`; the engine uses the expression path
-by default (JVM codegen beats Arrow transfer for these three regexes) and this
-UDF for the multi-pattern case where one Python pass over the batch replaces N
-JVM regex scans.
+:mod:`timberjack_spark.functions.extract`, which is the engine's parse path in
+every mode. This UDF runs only when a query opts in (``LogQuery.use_pandas_grok``,
+``Timber.pandas_grok()``, the ``t_level_histogram_grok`` query). The expression path
+wins by default because it stays inside the JVM's generated code: Catalyst
+prunes the parse columns a query never reads (a count needs none of them) and
+pushes filters beneath the projection, while this UDF ships every row through
+Arrow to a Python worker and computes all six columns for each. Both paths
+evaluate each regex at most once per row.
 """
 
 from __future__ import annotations

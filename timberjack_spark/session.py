@@ -12,7 +12,27 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> int:
+    """Cores this process may run on (its CPU affinity set, not the machine's)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """Half of the host's MemTotal as a JVM heap size; 4g without /proc/meminfo."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "4g"
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
 
 
 def _g1_region_opt() -> str:
@@ -68,8 +88,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode = driver-only JVM: give it real heap (32 executor threads
-        # allocating parse buffers GC-thrash an 8g heap; box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # allocating parse buffers GC-thrash an 8g heap)
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         # keep stdout clean: the bench contract is ONE machine-readable JSON
         # line on stdout (progress bars go to stderr, but belt-and-braces)
