@@ -1,12 +1,22 @@
 """Streaming flavor: stream==batch equivalence + stateful operator."""
 
+import datetime as dt
+import os
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
 from timberjack_spark.fixtures import transcripts_df
 from timberjack_spark.functions.extract import with_parsed
 from timberjack_spark.operators.route import with_category
-from timberjack_spark.streaming.pipeline import run_session_stats_once, run_stream_once
+from timberjack_spark.streaming.pipeline import (
+    run_session_stats_once,
+    run_stream_dedup_once,
+    run_stream_once,
+    run_stream_session_windows_once,
+    session_windows_agg,
+)
 
 N = 5000
 
@@ -18,40 +28,51 @@ def src_dir(spark, tmp_path_factory):
     return d
 
 
-def test_stream_equals_batch(spark, src_dir):
-    got = {
-        (r["win_start"], r["level"]): r["cnt"]
-        for r in run_stream_once(spark, src_dir, query_name="t_stream_eq").collect()
-    }
+def _level_counts(rows):
+    return {(r["win_start"], r["level"]): r["cnt"] for r in rows}
+
+
+def _batch_level_counts(spark, src_dir):
     batch = with_parsed(spark.read.parquet(src_dir))
-    expected = {
-        (r["win_start"], r["level"]): r["cnt"]
-        for r in batch.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("win_start"), "level"
-        )
+    return _level_counts(
+        batch.groupBy(F.date_trunc("hour", F.col("ts")).alias("win_start"), "level")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
-    }
-    assert got == expected
-
-
-def test_stream_session_windows_equals_batch(spark, tmp_path_factory):
-    """Session-window agg drained as a multi-batch stream == the SAME
-    aggregation run in batch (shared program: session_windows_agg), on data
-    whose sessions genuinely straddle the micro-batch file boundaries."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from timberjack_spark.streaming.pipeline import (
-        run_stream_session_windows_once,
-        session_windows_agg,
     )
 
-    d = tmp_path_factory.mktemp("sesswin_src")
-    # 3 users x 200 events, 10-min steps (< the 30-min gap, so each user is
-    # ONE long session) split across 4 time-ordered files: every file boundary
-    # splits an open session, forcing the cross-batch merge path
-    import datetime as dt
+
+def test_stream_equals_batch(spark, src_dir):
+    got = _level_counts(run_stream_once(spark, src_dir, query_name="t_stream_eq").collect())
+    assert got == _batch_level_counts(spark, src_dir)
+
+
+def test_drain_removes_its_temporary_checkpoint(spark, src_dir, tmp_path, monkeypatch):
+    """A drain without checkpoint_dir deletes the checkpoint it created; the
+    memory sink keeps its rows in the driver, so the table still collects."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    table = run_stream_once(spark, src_dir, query_name="t_stream_tmp_ckpt")
+    assert os.listdir(tmp_path) == []
+    assert _level_counts(table.collect()) == _batch_level_counts(spark, src_dir)
+
+
+def test_stream_dedup_equals_batch(spark, src_dir):
+    """Streaming exact dedup emits each distinct msg_key exactly once:
+    the drained set == batch DISTINCT, with no repeated row."""
+    got = [r["msg_key"] for r in run_stream_dedup_once(
+        spark, src_dir, query_name="t_stream_dedup"
+    ).collect()]
+    batch = with_parsed(spark.read.parquet(src_dir)).select("msg_key").distinct()
+    assert len(got) == len(set(got))
+    assert set(got) == {r["msg_key"] for r in batch.collect()}
+
+
+def _write_session_events(d):
+    """3 users x 200 events, 10-min steps (< the 30-min gap, so each user is
+    ONE long session) split across 4 time-ordered files: every file boundary
+    splits an open session, forcing the cross-batch merge path. Returns the
+    file paths in event-time order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -71,21 +92,53 @@ def test_stream_session_windows_equals_batch(spark, tmp_path_factory):
         }
     )
     step = 150
-    for i in range(4):
-        pq.write_table(tbl.slice(i * step, step), str(d / f"part-{i:03d}.parquet"))
+    paths = [str(d / f"part-{i:03d}.parquet") for i in range(4)]
+    for i, path in enumerate(paths):
+        pq.write_table(tbl.slice(i * step, step), path)
+    return paths
 
-    got = {
-        (r["user_id"], r["session_start"]): r["n_events"]
-        for r in run_stream_session_windows_once(
+
+def _sessions(rows):
+    return {(r["user_id"], r["session_start"]): r["n_events"] for r in rows}
+
+
+def test_stream_session_windows_equals_batch(spark, tmp_path_factory):
+    """Session-window agg drained as a multi-batch stream == the SAME
+    aggregation run in batch (shared program: session_windows_agg), on data
+    whose sessions genuinely straddle the micro-batch file boundaries."""
+    d = tmp_path_factory.mktemp("sesswin_src")
+    _write_session_events(d)
+
+    got = _sessions(
+        run_stream_session_windows_once(
             spark, str(d), query_name="t_stream_sesswin", max_files_per_trigger=1
         ).collect()
-    }
-    expected = {
-        (r["user_id"], r["session_start"]): r["n_events"]
-        for r in session_windows_agg(spark.read.parquet(str(d))).collect()
-    }
+    )
+    expected = _sessions(session_windows_agg(spark.read.parquet(str(d))).collect())
     assert got == expected
     # the merge actually happened: one session of 200 events per user
+    assert sorted(got.values()) == [200, 200, 200]
+
+
+def test_stream_session_windows_out_of_order(spark, tmp_path_factory):
+    """Disorder: the files arrive in REVERSE event-time order (the file with
+    the latest events has the oldest mtime, and the file source lists by
+    mtime), so at the default two files per trigger the second micro-batch
+    carries events that precede every open session and must merge backwards.
+    The drain still equals batch: one 200-event session per user."""
+    d = tmp_path_factory.mktemp("sesswin_disorder_src")
+    paths = _write_session_events(d)
+    t_arrive = dt.datetime(2024, 6, 1).timestamp()
+    for k, path in enumerate(reversed(paths)):
+        os.utime(path, (t_arrive + 60 * k, t_arrive + 60 * k))
+
+    got = _sessions(
+        run_stream_session_windows_once(
+            spark, str(d), query_name="t_stream_sesswin_disorder"
+        ).collect()
+    )
+    expected = _sessions(session_windows_agg(spark.read.parquet(str(d))).collect())
+    assert got == expected
     assert sorted(got.values()) == [200, 200, 200]
 
 

@@ -93,11 +93,6 @@ SF_ROWS = {"sf0.001": 6_000, "sf0.01": 60_000, "sf0.1": 600_000}
 FIXTURE_VERSION = 3
 
 
-def n_rows_for_sf(sf_dir: str) -> int:
-    """Map a driver sf directory (e.g. /root/testdata/sf0.01) to a fixture size."""
-    return SF_ROWS.get(os.path.basename(os.path.normpath(sf_dir)), 60_000)
-
-
 def _levels_for(i: np.ndarray) -> np.ndarray:
     lv = np.array(LEVELS)[i % 5]
     spike = (i >= SPIKE_START) & (i < SPIKE_END)

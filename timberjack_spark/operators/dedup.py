@@ -20,13 +20,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-from ..functions.extract import ws_trim
-from ..functions.patterns import WS_CLASS
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -65,42 +62,28 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 # ---------------------------------------------------------------------------
-# shingles + minhash LSH
+# word n-gram shingles + minhash LSH
 # ---------------------------------------------------------------------------
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), built with higher-order functions
-    (sequence + transform + slice) — pure JVM."""
-    # ws_trim, not F.trim: the Unicode charset is shared with the DuckDB
-    # twins (bare trim() diverges on NBSP-framed text — see token_count)
-    toks = F.split(F.lower(ws_trim(text)), WS_CLASS + "+")
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    # short docs: fall back to the whole text as a single shingle
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(F.array(F.lower(ws_trim(text))))
-
-
 def make_grams_udf(n: int):
-    """Arrow-batched twin of :func:`shingles` for full-corpus gram explodes.
+    """Arrow-batched word n-gram shingles: distinct ``n``-grams per document.
 
-    The Catalyst shingles expression (sequence + transform + slice +
-    array_join) is INTERPRETED — a salted fresh-plan probe reads 26.9 JVM
-    cpu-s per sf0.1 corpus pass (~6 ms/doc), which at 10^9 docs is real
-    cluster money. The same semantics in batch Python (one regex split + a
-    set build per doc) read 1.8 JVM cpu-s for the identical pass (wall 1.36
-    -> 0.65 s at 32 cores; the Python-worker cpu rides outside the JVM and
-    is itself small).
-    Kept byte-identical to shingles(): ws_trim charset strip, lower, split
-    on the shared WS class, first-occurrence-distinct n-grams, whole-text
-    fallback for short docs, [null] for null text — the decontamination
-    fuzz twin (tests/test_property_parse.py) pins the parity against the
-    DuckDB oracle on exotic-whitespace/non-ASCII alphabets. Used where the
-    gram stream covers the WHOLE corpus (decontamination); candidate-verify
-    joins keep the JVM expression (they see only the pruned survivors)."""
+    A Catalyst higher-order expression for the same grams (sequence +
+    transform + slice + array_join) runs INTERPRETED — a salted fresh-plan
+    probe read 26.9 JVM cpu-s per sf0.1 corpus pass (~6 ms/doc), which at
+    10^9 docs is real cluster money. The same semantics in batch Python (one
+    regex split + a set build per doc) read 1.8 JVM cpu-s for the identical
+    pass (wall 1.36 -> 0.65 s at 32 cores; the Python-worker cpu rides
+    outside the JVM and is itself small).
+    Gram contract: ws_trim charset strip, lower, split on the shared WS
+    class, first-occurrence-distinct n-grams, whole-text fallback for short
+    docs, [null] for null text. Its twin is the DuckDB n-gram SQL of the
+    ``d_contam_flags`` oracle (``__spark_entry__._oracle_sql_base``); the
+    decontamination fuzz test (tests/test_property_parse.py) pins the parity
+    on exotic-whitespace/non-ASCII alphabets. Used by every gram consumer:
+    batch and streaming decontamination, the contamination report,
+    exact_jaccard_verify and ngram_jaccard_pairs."""
     import re
 
     from ..functions.extract import _WS
@@ -134,16 +117,6 @@ def make_grams_udf(n: int):
     return pandas_udf(_batch, "array<string>")
 
 
-def minhash_signature(sh: Column, k: int = 64) -> Column:
-    """k minhashes via JVM expressions: min over shingles of xxhash64(shingle,
-    seed_j). Exact but interpreted per element — O(k * |shingles|) lambda
-    evaluations; prefer :func:`minhash_signatures` (codegen'd explode + partial
-    hash-agg) for large corpora."""
-    return F.array(
-        *[F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(j)))) for j in range(k)]
-    )
-
-
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3, k: int = 64
 ) -> DataFrame:
@@ -172,8 +145,8 @@ def make_minhash_udf(k: int = 64, n: int = 3, seed: int = 42):
     per-shingle Python hashing), then an affine family
     (a_j * h + b_j mod 2^64) gives the k permutations as a (k, total_shingles)
     matrix whose per-row segment minima come from ``np.minimum.reduceat``.
-    Tokenization matches shingles(): lower, whitespace split, word n-grams,
-    whole trimmed text when shorter than n tokens."""
+    Tokenization: lower, whitespace split, word n-grams, whole trimmed text
+    when shorter than n tokens."""
     rng = np.random.RandomState(seed)
     A = (rng.randint(1, 2**62, size=k, dtype=np.uint64) * np.uint64(2) + np.uint64(1))
     B = rng.randint(0, 2**63, size=k, dtype=np.uint64)
@@ -391,10 +364,9 @@ def exact_jaccard_verify(
         F.explode(F.array("id_a", "id_b")).alias("_id")
     ).distinct()
     # prune FIRST (broadcast semi join), parallelize, THEN build shingle
-    # arrays — via the Arrow grams UDF, whose output is pinned byte-identical
-    # to the shingles() expression (make_grams_udf docstring + fuzz twin), so
-    # the jaccard arithmetic downstream sees the same arrays while the
-    # per-doc cost drops ~15x vs the interpreted higher-order expression —
+    # arrays — via the Arrow grams UDF, whose gram contract is pinned against
+    # the DuckDB n-gram twin (make_grams_udf docstring + fuzz test), at ~15x
+    # less per-doc cpu than an interpreted higher-order expression —
     # and materialize them once. LAZY checkpoint: the final job itself
     # materializes-and-caches base the first time a branch reads it, so the
     # dedup happens without a dedicated driver job barrier (without any
@@ -775,8 +747,8 @@ def ngram_jaccard_pairs(
         *[F.col(c) for c in block_cols],
         # id FIRST: array_sort orders structs field-by-field, so members sort
         # by id and the pair explode emits id_a < id_b by construction.
-        # Arrow grams UDF, byte-identical to the shingles() expression
-        # (make_grams_udf contract) at ~15x less per-doc cpu.
+        # Arrow grams UDF (make_grams_udf contract) at ~15x less per-doc
+        # cpu than an interpreted higher-order expression.
         F.struct(
             F.col(id_col).alias("i"), make_grams_udf(n)(F.col(text_col)).alias("s")
         ).alias("_m"),
@@ -824,9 +796,9 @@ def decontaminate_flags(
     A training doc is contaminated when ANY of its word ``n``-grams appears
     anywhere in the eval corpus — the classic 8-to-13-gram overlap rule for
     benchmark decontamination. ``n_eval_grams_hit`` counts the doc's DISTINCT
-    n-grams found in the eval set (shingles() already dedups grams per doc),
-    so severity is rankable, and docs below ``n`` tokens fall back to
-    whole-text membership (the shingles() short-doc contract).
+    n-grams found in the eval set (make_grams_udf already dedups grams per
+    doc), so severity is rankable, and docs below ``n`` tokens fall back to
+    whole-text membership (the make_grams_udf short-doc contract).
 
     Scale shape: the eval corpus is benchmarks — orders of magnitude smaller
     than the training corpus — so its distinct grams broadcast (~10^7 grams
@@ -851,7 +823,7 @@ def decontaminate_flags(
     # sides: SQL `IN` semantics (the oracle) never match NULL, and null text
     # carries no content to decontaminate against.
     # Arrow-batched gram UDF on BOTH sides: this operator explodes grams for
-    # the whole corpus, where the interpreted Catalyst shingles expression
+    # the whole corpus, where an interpreted Catalyst gram expression
     # costs ~45x more cpu per doc (see make_grams_udf). _ensure_parallelism
     # spreads a small single-file scan across cores (no-op at scale).
     grams = make_grams_udf(n)

@@ -7,8 +7,8 @@ distribution the per-turn text-equality contract needs an explicit total order:
 Skew: one hot conversation (the fixture plants conv-000000 with 10% of all
 rows) breaks naive hash partitioning on conv_id — one task gets 10% of the
 corpus. Remedies here:
-  * ``salted_repartition`` — spread a hot key over ``n_salts`` partitions for
-    aggregations that can do partial+final (counts, histograms);
+  * ``salted_count_by`` — spread a hot key over ``n_salts`` groups with a
+    partial count per (key, salt), then a final sum per key;
   * AQE skew-join/coalesce stays enabled in the session (session.py) for the
     join/shuffle paths Spark can re-plan at runtime.
 """
@@ -37,26 +37,6 @@ def salt_col(key: Column, n_salts: int) -> Column:
     return F.pmod(F.xxhash64(key), F.lit(n_salts))
 
 
-def salted_repartition(
-    df: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    num_partitions: int | None = None,
-    salt_src: str = "turn_idx",
-) -> DataFrame:
-    """Repartition by (key, salt) so a hot key spreads over n_salts tasks.
-
-    The salt is derived from ``salt_src`` — any column with per-row variety
-    within a hot key (transcripts: turn_idx; events: event_id; documents:
-    doc_id) — deterministically, so two runs place the same row in the same
-    partition (required for resumable writes; no rand()).
-    """
-    salt = salt_col(F.col(salt_src), n_salts).alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col(key), salt)
-    return df.repartition(F.col(key), salt)
-
-
 def salted_count_by(
     df: DataFrame, key: str, n_salts: int = 16, salt_src: str = "turn_idx"
 ) -> DataFrame:
@@ -64,9 +44,11 @@ def salted_count_by(
     final sum per key — the classic salting pattern. For plain counts Spark's
     map-side partial aggregation already does this; this operator exists for
     cases where the first shuffle must be forced wider (e.g. after a narrow
-    source with few input splits). ``salt_src`` picks the salt-deriving column
-    (see salted_repartition) so the operator works on any table, not just
-    transcripts."""
+    source with few input splits). The salt is derived deterministically from
+    ``salt_src`` — any column with per-row variety within a hot key
+    (transcripts: turn_idx; events: event_id; documents: doc_id) — so two runs
+    place the same row in the same group (no rand()), and the operator works
+    on any table, not just transcripts."""
     salt = salt_col(F.col(salt_src), n_salts).alias("_salt")
     partial = df.groupBy(F.col(key), salt).agg(F.count(F.lit(1)).alias("_c"))
     return partial.groupBy(key).agg(F.sum("_c").alias("cnt"))

@@ -1,19 +1,24 @@
 """Structured Streaming flavor of the parse -> route -> aggregate pipeline.
 
-The reference's stdin loop (/root/reference/src/main.rs:218-297) is a
+The reference's stdin loop (timberjack src/main.rs:218-297) is a
 single-threaded line stream; the Spark-native analog is the SAME DataFrame
 program bound to ``readStream`` — one logic, two execution modes. Late data is
 handled with a watermark on ``ts``; windowed level counts mirror the batch
 trend histogram (A4) under event-time semantics.
 
 ``conv_session_stats`` demonstrates a custom stateful operator
-(``applyInPandasWithState``): per-conversation running statistics with a
-processing-time timeout that flushes idle conversations — the streaming
-equivalent of the per-conversation aggregates.
+(``applyInPandasWithState``): per-conversation running statistics — the
+streaming equivalent of the per-conversation aggregates.
+
+Every ``run_*_once`` stage builds its streaming DataFrame and returns ONE
+drain helper's result, :func:`_drain` (availableNow query, memory sink). Its
+checkpoint is a temporary directory deleted when the query ends or fails,
+unless the caller passes ``checkpoint_dir``, which is never deleted.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -38,22 +43,16 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
-def stream_source(
-    spark: SparkSession, src_dir: str, max_files: int | None = None
-) -> DataFrame:
+def stream_source(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-stream source over a transcript parquet directory (the sandbox
     stand-in for a Kafka/Iceberg-changelog source).
 
-    ``max_files`` bounds files per micro-batch — set it for continuous
-    deployments where per-batch latency matters. Leave None for bounded
-    availableNow drains: a cap there only serializes the drain into many
-    micro-batches (measured: 128 files / cap 4 = 32 sequential batches, 3x the
-    wall time) with zero correctness benefit.
+    No ``maxFilesPerTrigger``: on a bounded availableNow drain a cap only
+    serializes the drain into many micro-batches (measured: 128 files / cap
+    4 = 32 sequential batches, 3x the wall time) with zero correctness
+    benefit. A continuous deployment would set one to bound per-batch latency.
     """
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    return reader.parquet(src_dir)
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
 
 
 def routed_stream(src: DataFrame) -> DataFrame:
@@ -65,45 +64,63 @@ def routed_stream(src: DataFrame) -> DataFrame:
     return with_category(with_parsed(src.withColumn("ts", F.col("ts").cast("timestamp"))))
 
 
-def windowed_level_counts(
-    parsed: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Event-time windowed level histogram with late-data watermark."""
+def windowed_level_counts(parsed: DataFrame) -> DataFrame:
+    """Event-time 1-hour level histogram with a 2-hour late-data watermark."""
     return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("level"))
+        parsed.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("level"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("win.start").cast("timestamp_ntz").alias("win_start"), "level", "cnt")
     )
 
 
+def _drain(
+    spark: SparkSession,
+    df: DataFrame,
+    query_name: str,
+    output_mode: str,
+    checkpoint_dir: str | None,
+    state_partitions: int | None,
+) -> DataFrame:
+    """Run ``df`` to completion as an availableNow query into a memory sink
+    named ``query_name`` and return the drained table.
 
-def _with_stream_shuffle(spark: SparkSession, state_partitions: int | None):
-    """Context manager: pin spark.sql.shuffle.partitions for a stream start.
+    ``state_partitions`` pins spark.sql.shuffle.partitions for the stream
+    start (None keeps the session's value). Streaming state lives in one
+    store instance PER shuffle partition, and a bounded drain pays that
+    instance setup every run: the sf0.1 windowed drain measured 9.7 s at 64
+    partitions vs 2.0 s at 16 (identical result). Size state partitions to
+    the stateful operator's key volume, not to the batch session's scan
+    parallelism — at cluster scale you would RAISE this (one instance per
+    executor core), here the default 16 fits drain-sized state. The conf is
+    restored after .start(): the stream binds it at start.
 
-    Streaming state lives in one store instance PER shuffle partition, and a
-    bounded drain pays that instance setup every run: the sf0.1 windowed
-    drain measured 9.7 s at 64 partitions vs 2.0 s at 16 (identical result).
-    Size state partitions to the stateful operator's key volume, not to the
-    batch session's scan parallelism — at cluster scale you would RAISE this
-    (one instance per executor core), here the default 16 fits drain-sized
-    state. The conf is restored after .start(): the stream binds it at start.
+    With ``checkpoint_dir=None`` the checkpoint goes to a temporary directory
+    removed once the query ends, also when it fails. The returned table
+    survives that: the memory sink holds its rows in the driver, not in the
+    checkpoint. A caller-supplied ``checkpoint_dir`` is never deleted.
     """
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        if state_partitions is None:
-            yield
-            return
+    with contextlib.ExitStack() as cleanup:
+        if checkpoint_dir is None:
+            checkpoint_dir = cleanup.enter_context(
+                tempfile.TemporaryDirectory(prefix="tj_drain_ckpt_")
+            )
+        writer = (
+            df.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
+            .trigger(availableNow=True)
+        )
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         try:
-            yield
+            q = writer.start()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return cm()
+        q.awaitTermination()
+    return spark.table(query_name)
 
 
 def run_stream_once(
@@ -115,20 +132,9 @@ def run_stream_once(
 ) -> DataFrame:
     """Drain the source with an availableNow trigger into a memory sink and
     return the result table — used to pin stream==batch equivalence in tests.
-    ``state_partitions`` sizes the stateful stage (see _with_stream_shuffle)."""
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_stream_ckpt_")
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            windowed_level_counts(routed_stream(stream_source(spark, src_dir)))
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    ``state_partitions`` sizes the stateful stage (see _drain)."""
+    levels = windowed_level_counts(routed_stream(stream_source(spark, src_dir)))
+    return _drain(spark, levels, query_name, "complete", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -146,54 +152,34 @@ SESSION_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def _make_update_fn(idle_timeout_ms: int | None):
+def conv_session_stats(parsed: DataFrame) -> DataFrame:
+    """Stateful per-conversation running stats via applyInPandasWithState.
+
+    No state timeout: under a bounded availableNow drain a re-armed
+    processing-time timeout keeps scheduling empty batches, so the query
+    would never terminate.
+    """
+    from ..operators.route import errors_pred
+
+    # nested, so cloudpickle ships it by value: python workers need not
+    # import this package
     def update(key, pdfs, state: GroupState):
         (conv_id,) = key
-        if state.hasTimedOut:
-            # idle conversation: flush final stats and drop the state —
-            # crucially do NOT re-arm the timeout, or an availableNow drain
-            # would keep scheduling empty batches forever
-            n_turns, n_errors, last_idx = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"conv_id": [conv_id], "n_turns": [n_turns],
-                 "n_errors": [n_errors], "last_turn_idx": [last_idx]}
-            )
-            return
         n_turns, n_errors, last_idx = state.get if state.exists else (0, 0, -1)
         for pdf in pdfs:
             n_turns += len(pdf)
-            # _is_err is precomputed JVM-side (see conv_session_stats): the
-            # python side sums a small int column instead of string-comparing
-            # every category value per group — per-group time is the cost
-            # driver of this stage (thousands of groups cross the boundary)
+            # _is_err is precomputed JVM-side (see below): the python side
+            # sums a small int column instead of string-comparing every
+            # category value per group — per-group time is the cost driver
+            # of this stage (thousands of groups cross the boundary)
             n_errors += int(pdf["_is_err"].to_numpy().sum())
             if len(pdf):
                 last_idx = max(last_idx, int(pdf["turn_idx"].to_numpy().max()))
         state.update((n_turns, n_errors, last_idx))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {"conv_id": [conv_id], "n_turns": [n_turns],
              "n_errors": [n_errors], "last_turn_idx": [last_idx]}
         )
-
-    return update
-
-
-def conv_session_stats(parsed: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
-    """Stateful per-conversation running stats via applyInPandasWithState.
-
-    ``idle_timeout_ms`` enables processing-time timeouts for continuous
-    deployments (flush + evict idle conversations); leave None for bounded
-    drains (availableNow), where a re-armed timeout would prevent termination.
-    """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    from ..operators.route import errors_pred
 
     return (
         parsed.select(
@@ -210,11 +196,11 @@ def conv_session_stats(parsed: DataFrame, idle_timeout_ms: int | None = None) ->
         )
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_update_fn(idle_timeout_ms),
+            update,
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -226,27 +212,15 @@ def run_session_stats_once(
     checkpoint_dir: str | None = None,
     state_partitions: int | None = 16,
 ) -> DataFrame:
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_sess_ckpt_")
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            conv_session_stats(routed_stream(stream_source(spark, src_dir)))
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    stats = conv_session_stats(routed_stream(stream_source(spark, src_dir)))
+    return _drain(spark, stats, query_name, "update", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
 # streaming session windows — the F.session_window aggregation from the batch
 # q_session_windows, run under the streaming engine. The API is shared between
 # batch and streaming by construction; this drain completes the stream==batch
-# contract for the session-window stage (the other streaming stages: windowed
-# counts, stateful conv stats, exact dedup).
+# contract for the session-window stage.
 # ---------------------------------------------------------------------------
 
 EVENTS_SCHEMA = T.StructType(
@@ -261,12 +235,13 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def session_windows_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """(user_id, session_start, n_events) via the built-in session_window —
-    the SAME program the batch q_session_windows runs (one logic, two modes)."""
+def session_windows_agg(events: DataFrame) -> DataFrame:
+    """(user_id, session_start, n_events) via the built-in session_window with
+    a 30-minute gap — the SAME program the batch q_session_windows runs (one
+    logic, two modes)."""
     return (
         events.groupBy(
-            "user_id", F.session_window(F.col("ts").cast("timestamp"), gap).alias("w")
+            "user_id", F.session_window(F.col("ts").cast("timestamp"), "30 minutes").alias("w")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -282,7 +257,6 @@ def run_stream_session_windows_once(
     events_path: str,
     query_name: str = "stream_sessions",
     checkpoint_dir: str | None = None,
-    gap: str = "30 minutes",
     state_partitions: int | None = 16,
     max_files_per_trigger: int | None = 2,
 ) -> DataFrame:
@@ -302,23 +276,11 @@ def run_stream_session_windows_once(
     operator exists to exercise — would never run. The events fixture is tiny,
     so the serialized batches cost milliseconds.
     """
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_sesswin_ckpt_")
     reader = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(events_path)
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            session_windows_agg(src, gap=gap)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    sessions = session_windows_agg(reader.parquet(events_path))
+    return _drain(spark, sessions, query_name, "complete", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -340,23 +302,12 @@ def run_stream_dedup_once(
     """Drain the source, emitting each distinct parsed message template
     (msg_key) exactly once. Dedup on the template, not the raw line: raw log
     lines are near-unique (timestamps), templates are the dedup unit."""
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_dedup_ckpt_")
     deduped = (
         routed_stream(stream_source(spark, src_dir))
         .select("msg_key")
         .dropDuplicates(["msg_key"])
     )
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, deduped, query_name, "append", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -414,13 +365,11 @@ def run_stream_decontam_once(
     """
     from ..operators.dedup import make_grams_udf
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_decontam_ckpt_")
     # materialize the static side ONCE before the stream starts: a
     # stream-static join re-evaluates the static plan per micro-batch, and
-    # the eval gram build (interpreted shingle expressions + distinct) is the
-    # expensive part — localCheckpoint turns every per-batch broadcast build
-    # into a read of the tiny materialized hash set (measured 9.0 -> ~3 s at
-    # sf0.1). _ensure_parallelism spreads the one-time build itself.
+    # the eval gram build (gram UDF + distinct) is the expensive part —
+    # localCheckpoint turns every per-batch broadcast build into a read of
+    # the tiny materialized gram set (measured 9.0 -> ~3 s at sf0.1).
     # gram STRINGS, not 64-bit hashes, as the join key — same exactness
     # argument as batch decontaminate_flags (hash collisions against a
     # 10^11+-gram corpus approach O(1) false flags)
@@ -437,7 +386,7 @@ def run_stream_decontam_once(
     )
     src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
     # stream-side repartition BEFORE the gram explode: a 4-file micro-batch
-    # scans as 4 tasks and the interpreted shingle expressions would run at
+    # scans as 4 tasks and the per-doc gram UDF would run at
     # 1/8 utilization — the streaming analog of _ensure_parallelism (at real
     # scale micro-batches carry many input splits and the exchange is noise)
     g_doc = (
@@ -450,17 +399,7 @@ def run_stream_decontam_once(
         .select("doc_id")
         .dropDuplicates(["doc_id"])
     )
-    with _with_stream_shuffle(spark, state_partitions):
-        q = (
-            contaminated.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, contaminated, query_name, "append", checkpoint_dir, state_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -490,19 +429,9 @@ def run_stream_quality_once(
     of _ensure_parallelism — a small micro-batch scans as few tasks)."""
     from ..functions.text import quality_filter
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_quality_ckpt_")
     src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_path)
     gated = quality_filter(src.repartition(spark.sparkContext.defaultParallelism))
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, gated, query_name, "append", checkpoint_dir, None)
 
 
 def run_stream_ingest_dedup_once(
@@ -539,7 +468,6 @@ def run_stream_ingest_dedup_once(
     plan every micro-batch), and only 16-byte hashes broadcast — never
     history text.
     """
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="tj_ingest_ckpt_")
     hist = (
         history_df.select(F.md5("text").alias("_h"))
         .distinct()
@@ -551,13 +479,4 @@ def run_stream_ingest_dedup_once(
         .join(F.broadcast(hist), "_h", "left_anti")
         .select("doc_id")
     )
-    q = (
-        accepted.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, accepted, query_name, "append", checkpoint_dir, None)

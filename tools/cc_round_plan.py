@@ -68,6 +68,7 @@ def main() -> None:
     )
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
+    os.makedirs(out_dir, exist_ok=True)
     for name, step in (("cc_round_r5", step5), ("cc_round_r6", step6)):
         jumped = step.join(
             step.select(F.col("nid").alias("_p"), F.col("lbl").alias("_plbl")),
