@@ -270,6 +270,18 @@ def test_connected_components_chain_and_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 5: 5, 7: 5}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """A 4-node path needs more than one round: max_iter=1 must raise, not
+    return half-propagated labels; the default converges to the minima."""
+    from timberjack_spark.operators.dedup import connected_components
+
+    path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match=r"max_iter=1 rounds: the last round changed 3 labels"):
+        connected_components(path, max_iter=1).collect()
+    got = {r["nid"]: r["cluster_id"] for r in connected_components(path).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0}
+
+
 def test_near_dup_clusters_transitive(docs_df):
     """Planted near-dups: docs 0-3 are one transitive cluster (0~1, 0~2, 2~3
     at threshold 0.5), 4~5 another; distinct docs stay singletons with

@@ -2,11 +2,18 @@
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import oracle_ref
-from timberjack_spark.fixtures import transcripts_pandas
-from timberjack_spark.functions.extract import MODES, with_parsed
+from timberjack_spark.fixtures import transcripts_pandas, transcripts_path
+from timberjack_spark.functions.extract import (
+    _ERROR_TYPE_JVM_RE,
+    _LEVEL_JVM_RE,
+    MODES,
+    with_parsed,
+)
 from timberjack_spark.functions.grok import grok_batch, with_parsed_pandas
+from timberjack_spark.functions.patterns import ERROR_TYPE_RE, LEVEL_RE, LEVEL_WORDS
 
 EDGE_LINES = [
     "2025-03-21 14:00:00,123 [ERROR] Database connection failed",
@@ -172,10 +179,8 @@ def test_unicode_whitespace_matches_all_engines(spark):
     the White_Space codepoints literally — pin tri-engine agreement (Catalyst,
     DuckDB RE2, pure-Python oracle) on exactly that scenario."""
     import duckdb
-    from pyspark.sql import functions as F
 
     from oracle_ref import ERR_RE
-    from timberjack_spark.functions.patterns import ERROR_TYPE_RE
 
     lines = [
         "Connection timeout while calling upstream",   # NBSP
@@ -202,3 +207,46 @@ def test_unicode_whitespace_matches_all_engines(spark):
     ]
     assert spark_got == duck_got == py_got
     assert sum(1 for g in spark_got if g) == 3  # the three separated variants match
+
+
+# Inputs that probe each rewrite of the JVM twins: every level word in upper,
+# lower and mixed case and both forms (the first-character class), near-miss
+# levels and a non-ASCII letter that Unicode case folding would map to 'S',
+# and the letter-run / whitespace-run edges of the error-type alternatives.
+TWIN_ADVERSARIAL_LINES = [
+    f"at {form}"
+    for w in LEVEL_WORDS
+    for v in (w, w.lower(), "".join(c.lower() if i % 2 else c for i, c in enumerate(w)))
+    for form in (f"[{v}] msg", f"{v}: msg")
+] + [
+    "[Fine]", "fInE:", "WARNINGS:", "xWARN:", "\u017fEVERE:",
+    "Foo\u2003\u2003timeout", "Foo \t timeout", "ABCtimeout", "Connectiontimeout",
+    "xConnection timeout", "FooExceptionBarError", "a401 Unauthorized",
+    "503 Service Unavailable",
+    "Q" * 4991 + "Exception",
+]
+
+
+@pytest.mark.parametrize("source", ["edges", "sf0.001", "adversarial"])
+def test_jvm_twins_match_canonical_patterns(spark, source):
+    """The fail-fast JVM twins return the canonical patterns' leftmost match
+    (level group 0, error type group 1) row by row, on the JVM itself, so
+    the check isolates the rewrite from dialect differences. The error twin
+    runs without the contains prefilter."""
+    if source == "sf0.001":
+        df = spark.read.parquet(transcripts_path(source)).select("text")
+    else:
+        lines = EDGE_LINES if source == "edges" else TWIN_ADVERSARIAL_LINES
+        df = spark.createDataFrame([(t,) for t in lines], "text string")
+    level_c, level_t = (F.regexp_extract("text", p, 0) for p in (LEVEL_RE, _LEVEL_JVM_RE))
+    err_c, err_t = (F.regexp_extract("text", p, 1) for p in (ERROR_TYPE_RE, _ERROR_TYPE_JVM_RE))
+    mismatch = (level_c != level_t) | (err_c != err_t)
+    out = df.agg(
+        F.count_if(mismatch).alias("bad"),
+        F.count_if(level_c != "").alias("levels"),
+        F.count_if(err_c != "").alias("errors"),
+        F.slice(F.collect_list(F.when(mismatch, F.substring("text", 1, 200))), 1, 5).alias("ex"),
+    ).first()
+    assert out["bad"] == 0, out["ex"]
+    # the inputs exercise both patterns, not just their no-match paths
+    assert out["levels"] > 0 and out["errors"] > 0

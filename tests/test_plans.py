@@ -46,7 +46,8 @@ def test_enrich_joins_are_broadcast(spark, src):
 
 
 def test_flagship_parse_evaluates_each_regex_once(spark, src):
-    """One LEVEL_RE scan and one is_jsonish trim per row. Subexpression
+    """One LEVEL_RE scan and one is_jsonish trim per row, and both hot
+    regexes run as their fail-fast JVM twins. Subexpression
     elimination does not share expressions inside CASE WHEN branches, so a
     flat projection repeats them; the staged projection in with_parsed must
     keep each in a Project of its own."""
@@ -55,6 +56,9 @@ def test_flagship_parse_evaluates_each_regex_once(spark, src):
     assert plan.count(LEVEL_RE) == 1
     assert plan.count("StartsWith(trim(") == 1
     assert "ArrowEvalPython" not in plan
+    # the level and error-type scans run the fail-fast JVM twins
+    assert "(?=(?i:[\\[EWIDTSF]))" in plan
+    assert "(?=[A-Za-z45])" in plan
 
 
 @pytest.mark.parametrize("mode", MODES)

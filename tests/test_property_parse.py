@@ -28,7 +28,10 @@ WORDS = ["Cache", "miss", "user_42", "Connection", "timeout", "NullPointerExcept
          # lookbehind edges of the JVM error_type twin (a match never starts
          # mid letter-run) and level derivation from the single LEVEL_RE match
          "xConnection timeout", "FooBarException", "Exception", "ExceptionFooException",
-         "a500 Internal Server Error", "OutOfMemoryError:", "[warning]", "WARNING:"]
+         "a500 Internal Server Error", "OutOfMemoryError:", "[warning]", "WARNING:",
+         # first-character gates and possessive runs of the fail-fast JVM twins
+         "fine:", "[Fine]", "sEvErE:", "Foo\u2003\u2003timeout", "Foo\t timeout",
+         "503 Service Unavailable", "a401 Unauthorized"]
 
 line_st = st.one_of(
     # bracketed-level generic lines

@@ -29,6 +29,7 @@ from .patterns import (
     JSON_MESSAGE_KEYS,
     JSON_TIMESTAMP_KEYS,
     LEVEL_RE,
+    LEVEL_WORDS,
     TIMESTAMP_RE,
     WS_CODEPOINTS,
 )
@@ -65,13 +66,48 @@ def ws_trim(col: Column) -> Column:
 _ERROR_TYPE_LITERALS = ["Exception", "Error", "timeout", "Unauthorized", "Unavailable"]
 
 
-# JVM-only twin of ERROR_TYPE_RE: each ``[A-Za-z]+...`` alternative may only
-# start at the beginning of a letter run. The leftmost match is unchanged — a
-# match starting mid-run implies one starting at the run's first letter — but
-# java.util.regex no longer retries every offset of a long letter run, each
-# retry re-consuming the rest of the run (O(run^2)). RE2 (the DuckDB oracle)
-# has no lookbehind and keeps the canonical pattern.
-_ERROR_TYPE_JVM_RE = ERROR_TYPE_RE.replace("[A-Za-z]+", "(?<![A-Za-z])[A-Za-z]+")
+# JVM-only twins of the two hot canonical patterns. java.util.regex has no
+# literal prefilter for an alternation: an unanchored search retries every
+# alternative at every offset of the line. Each twin fails fast on offsets
+# that cannot start a match and returns the same leftmost match (same group 0
+# and group 1) as its canonical pattern on every input. RE2 (the DuckDB
+# oracle) has no lookaround, so the oracle SQL keeps the canonical patterns;
+# tests/test_extract.py pins twin == canonical row by row on the JVM.
+#
+# _LEVEL_JVM_RE = (?=(?i:[\[EWIDTSF]))(?:LEVEL_RE). Every alternative of
+# LEVEL_RE starts with '[' or with the first letter of a level word, so the
+# lookahead rejects only offsets where no alternative can match. It sits under
+# the same (?i) flag as the words; Java folds case ASCII-only without
+# UNICODE_CASE, so it admits exactly the characters the words' first letters
+# admit (no 'ſ' for S). It is zero-width and non-capturing: the alternatives
+# are tried in the same order at the same offsets, and groups are unchanged.
+_LEVEL_FIRST = "".join(dict.fromkeys(w[0] for w in LEVEL_WORDS))
+_LEVEL_JVM_RE = r"(?=(?i:[\[" + _LEVEL_FIRST + "]))(?:" + LEVEL_RE + ")"
+
+# _ERROR_TYPE_JVM_RE = (?=[A-Za-z45])((?<![A-Za-z])(?:[A-Za-z]+Exception|
+#   [A-Za-z]+Error|[A-Za-z]++<WS>++timeout)|Connection timeout|500 ...|401 ...
+#   |503 ...), three rewrites of ERROR_TYPE_RE, each keeping the match:
+# 1. First-character lookahead: every alternative starts with a letter, '4'
+#    or '5'.
+# 2. One letter-run lookbehind shared by the three [A-Za-z]+ alternatives (a
+#    zero-width assertion distributes over an alternation at one offset). A
+#    match of those three, or of 'Connection timeout', that starts mid
+#    letter-run implies an earlier match of alternative 1-3 at the run's first
+#    letter. So at the leftmost match offset those three never start mid-run:
+#    the lookbehind only skips attempts that cannot win, and it stops the
+#    O(run^2) retries of every offset of a long letter run.
+# 3. Possessive quantifiers in the timeout alternative: a letter is never
+#    whitespace and whitespace is never 't', so giving back a letter or a
+#    whitespace character can never let the rest match.
+# The alternatives keep their order and group 1 stays the outer group.
+_ERR_ALTS = ERROR_TYPE_RE[1:-1].split("|")
+_ERROR_TYPE_JVM_RE = (
+    "(?=[A-Za-z45])((?<![A-Za-z])(?:"
+    + "|".join([*_ERR_ALTS[:2], _ERR_ALTS[2].replace("+", "++")])
+    + ")|"
+    + "|".join(_ERR_ALTS[3:])
+    + ")"
+)
 
 
 def error_type(text: Column) -> Column:
@@ -110,8 +146,9 @@ def with_parsed(df: DataFrame, text_col: str = "text", mode: str = "auto") -> Da
        of the trimmed text. The Generate's input is null on non-JSON rows, so
        every ``_j*`` output is null there and "JSON wins" is just
        ``coalesce(json_value, generic_value)``.
-    2. ``_lv0`` = ``LEVEL_RE`` group 0, null on rows where the JSON level wins,
-       and ``_ts`` = JSON timestamp else ``TIMESTAMP_RE`` group 1.
+    2. ``_lv0`` = ``LEVEL_RE`` group 0 (run as its fail-fast JVM twin), null
+       on rows where the JSON level wins, and ``_ts`` = JSON timestamp else
+       ``TIMESTAMP_RE`` group 1.
     3. ``level`` comes from ``_lv0`` by string ops only (bracket form -> the
        word inside, colon form -> the whole match, both uppercased; no second
        regex scan); ``bucket`` is a prefix of ``_ts``.
@@ -172,7 +209,7 @@ def _parse_stages(text_col: str, mode: str):
 
     json_level = json_or(JSON_LEVEL_KEYS, F.lit(None))
     stage2 = {
-        "_lv0": F.when(json_level.isNull(), F.regexp_extract(text, LEVEL_RE, 0)),
+        "_lv0": F.when(json_level.isNull(), F.regexp_extract(text, _LEVEL_JVM_RE, 0)),
         "_ts": json_or(JSON_TIMESTAMP_KEYS, F.regexp_extract(text, TIMESTAMP_RE, 1)),
     }
     m0 = F.col("_lv0")

@@ -6,6 +6,12 @@ portable subset shared by Java regex (Spark), Python ``re`` (pandas UDFs) and RE
 DuckDB oracle): scoped ``(?i:...)`` groups instead of mid-pattern ``(?i)`` flags, no
 lookaround, no backreferences. That pinning is what makes per-turn text equality hold
 across the three dialects (SURVEY.md §7.3).
+
+The portable-subset rule binds the canonical patterns in this module. The engine's
+expression path (``functions/extract.py``) runs JVM-only twins of ``LEVEL_RE`` and
+``ERROR_TYPE_RE`` built from them, which may use lookaround and possessive quantifiers
+so that ``java.util.regex`` fails fast; ``tests/test_extract.py`` pins each twin to the
+same leftmost match as its canonical pattern, row by row on the JVM.
 """
 
 # Unicode White_Space codepoints — the exact set Rust's str::trim and the
@@ -33,10 +39,11 @@ WS_CLASS = "[" + "".join(chr(cp) for cp in WS_CODEPOINTS) + "]"
 #     level (later uppercased), so "ERROR:" never equals a level filter "ERROR".
 # This colon quirk is observable in the reference's histograms and is replicated
 # deliberately (reference: src/parser/generic.rs:6-8, tests/edge_cases.rs:171-201).
-LEVEL_RE = (
-    r"\[(?i:(ERROR|WARN|INFO|DEBUG|TRACE|SEVERE|WARNING|FINE))\]"
-    r"|(?i:ERROR|WARN|INFO|DEBUG|TRACE|SEVERE|WARNING|FINE):"
-)
+# LEVEL_WORDS also builds the first-character gate of the JVM twin (extract.py);
+# the order is the alternation order, part of the leftmost-first semantics.
+LEVEL_WORDS = ("ERROR", "WARN", "INFO", "DEBUG", "TRACE", "SEVERE", "WARNING", "FINE")
+_LEVEL_ALT = "|".join(LEVEL_WORDS)
+LEVEL_RE = r"\[(?i:(" + _LEVEL_ALT + r"))\]|(?i:" + _LEVEL_ALT + "):"
 
 # Timestamp extraction: space-separated date-time only (the ISO 'T' form deliberately
 # does NOT match — JSON timestamps come from the JSON fields instead).

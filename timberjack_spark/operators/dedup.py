@@ -453,14 +453,20 @@ def connected_components(
     (neighbours ∪ self) IS least(own, min-neighbour), and every node
     appears in its own self-loop, so the old left-join's
     no-neighbour coalesce case cannot occur.
+
+    Raises ``RuntimeError`` when the last of ``max_iter`` rounds still
+    changed labels: those labels need not be component minima yet.
     """
-    # materialize the symmetrized edge table ONCE: every round's propagate
-    # join references it, and without the checkpoint each round re-executes
-    # the whole upstream pair pipeline (for near_dup_clusters that is the
-    # LSH candidate generation + exact-Jaccard verify, re-run ~2x per round —
-    # the dominant cost of d_dedup_clusters in r5, measured ~7 re-executions
-    # over a 3-round graph). Edge-endpoint-subgraph-sized, so the
-    # materialization is tiny at any scale.
+    if max_iter < 1:
+        raise ValueError("max_iter must be at least 1")
+    # the symmetrized edge table is checkpointed twice: here, and again after
+    # the self-loop union below. This first checkpoint is the one that keeps
+    # the upstream pair pipeline (for near_dup_clusters the LSH candidate
+    # generation + exact-Jaccard verify) from running twice — once for the
+    # eager label checkpoint and once more when the unioned table
+    # materializes; without any checkpoint every round re-executed it (~7
+    # re-executions over a 3-round graph in r5). Edge-endpoint-subgraph-
+    # sized, so each materialization is tiny at any scale.
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
@@ -509,6 +515,11 @@ def connected_components(
         labels = jumped.select("nid", "lbl")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} rounds: "
+            f"the last round changed {changed} labels"
+        )
     return labels.select("nid", F.col("lbl").alias("cluster_id"))
 
 

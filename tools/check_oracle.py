@@ -2,6 +2,8 @@
 query at sf0.01 via Spark AND its DuckDB oracle, compare row count, column
 names, and (column-name-sorted, row-sorted) values. Strict equality — the
 driver hashes values, so 'close' is not enough.
+``tests/test_oracle_sweep.py`` runs the same comparison over every query as
+part of the test suite.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -24,6 +26,16 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+# the correctness-check scale, next to the entry module's default data
+SF_DIR = os.path.join(os.path.dirname(entrymod.SF_DEFAULT), "sf0.01")
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -72,12 +84,10 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
     only = set(sys.argv[2:])
     spark = get_spark(cores=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed = []
     for name, fn in qs.items():
