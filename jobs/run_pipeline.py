@@ -44,7 +44,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from timberjack_spark.fixtures import dim_role_df, dim_tool_df
-    from timberjack_spark.operators.analyze import LogQuery, analyze, collect_report
+    from timberjack_spark.operators.analyze import LogQuery, collect_report, matched, report_frames
     from timberjack_spark.operators.enrich import enrich
     from timberjack_spark.operators.route import with_category
     from timberjack_spark.sources.checkpoint import run_resumable_fanout
@@ -63,12 +63,14 @@ def main() -> None:
     q = LogQuery.from_cli(pattern=args.pattern or None, level=args.level or None,
                           fields=args.field, mode=mode)
 
-    results = analyze(df, q, cache=True)
-    routed = with_category(results["matched"])
+    # one parse of the source, kept at full width: the fan-out routes on the
+    # source's role/tool columns and the report aggregates read the same frame
+    m = matched(df, q).persist()
+    routed = with_category(m)
     enriched = enrich(routed, dim_role_df(spark), dim_tool_df(spark))
     fanout = run_resumable_fanout(enriched, args.output, n_buckets=args.buckets)
-    report = collect_report(results, q)
-    results["matched"].unpersist()
+    report = collect_report(report_frames(m, q), q)
+    m.unpersist()
 
     summary = {
         "mode": mode,

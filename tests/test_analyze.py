@@ -1,10 +1,20 @@
 """Full-pipeline parity against the pure-Python reference-semantics oracle."""
 
+from dataclasses import replace
+
 import pytest
 
 import oracle_ref
 from timberjack_spark.fixtures import transcripts_pandas
-from timberjack_spark.operators.analyze import LogQuery, analyze, collect_report
+from timberjack_spark.operators import aggregates as agg
+from timberjack_spark.operators.analyze import (
+    LogQuery,
+    analyze,
+    collect_report,
+    matched,
+    repetition_ratio,
+    report_frames,
+)
 
 N = 3900  # 3 * 1300 — covers all form/level/template cycles
 
@@ -89,6 +99,79 @@ def test_empty_input_ratio_zero(spark):
     doc = collect_report(analyze(df, q), q)
     assert doc["total_count"] == 0
     assert doc["stats"]["repetition_ratio"] == 0.0
+
+
+def cached_report(df, q) -> dict:
+    res = analyze(df, q, cache=True)
+    try:
+        return collect_report(res, q)
+    finally:
+        res["matched"].unpersist()
+
+
+@pytest.mark.parametrize(
+    "q",
+    [LogQuery(), LogQuery(pattern="Cache"), LogQuery(pattern="no such token anywhere"), None],
+    ids=["all", "cache", "no-match", "empty-input"],
+)
+def test_show_unique_report_equals_message_stats(spark, corpus, q):
+    """The unique count and ratio taken from the collected key list equal the
+    report without --show-unique and the message_stats aggregate, bit for bit."""
+    _, df = corpus
+    if q is None:
+        df, q = spark.createDataFrame([], "text string"), LogQuery()
+    with_list = cached_report(df, replace(q, show_unique=True))
+    without = cached_report(df, q)
+    assert with_list["stats"]["unique_messages"] == sorted(with_list["stats"]["unique_messages"])
+    assert {**with_list["stats"], "unique_messages": None} == without["stats"]
+    assert {**with_list, "stats": None} == {**without, "stats": None}
+    ms = agg.message_stats(matched(df, q)).collect()[0]
+    assert with_list["stats"]["unique_messages_count"] == ms["unique_cnt"]
+    assert with_list["stats"]["repetition_ratio"] == ms["repetition_ratio"]
+
+
+def test_repetition_ratio_matches_message_stats_on_every_small_pair(spark):
+    """The driver ratio equals message_stats' Spark column bit for bit for
+    every 1 <= unique <= total <= 60 (a reassociated formula differs on 848
+    of these pairs)."""
+    from pyspark.sql import functions as F
+
+    n = spark.range(1, 61)
+    tu = n.select(F.col("id").alias("t")).crossJoin(n.select(F.col("id").alias("u"))).filter("u <= t")
+    rows = tu.select("t", "u", F.explode(F.sequence(F.lit(0).cast("long"), F.col("t") - 1)).alias("i"))
+    keyed = rows.select("t", "u", (F.col("i") % F.col("u")).cast("string").alias("msg_key"))
+    got = agg.message_stats(keyed.groupBy("t", "u")).collect()
+    assert len(got) == 60 * 61 // 2
+    for r in got:
+        assert (r["cnt"], r["unique_cnt"]) == (r["t"], r["u"])
+        assert repetition_ratio(r["u"], r["t"]) == r["repetition_ratio"], (r["u"], r["t"])
+
+
+@pytest.mark.parametrize("q", QUERIES, ids=range(len(QUERIES)))
+def test_narrow_spine_report_equals_wide(spark, corpus, q):
+    """The report over the narrow persisted spine is the report over the full
+    parsed frame (every source and parse column persisted)."""
+    _, df = corpus
+    q = replace(q, show_unique=True)
+    wide = matched(df, q).persist()
+    try:
+        expected = collect_report(report_frames(wide, q), q)
+    finally:
+        wide.unpersist()
+    assert cached_report(df, q) == expected
+
+
+def test_unique_messages_sort_is_spark_string_order(spark):
+    """The driver-side sort of the unique keys is Spark's binary string order,
+    also past the BMP (UTF-16 order would put U+1F600 before U+FF5E)."""
+    keys = ["b", "B", "a b", "\u00e9", "\uff5e", "\U0001f600", "\u00e9t\u00e9", "10", "9"]
+    lines = [f"2025-03-21 10:00:00 [INFO] {k}" for k in keys] + [f"[WARN] {k}" for k in keys]
+    df = spark.createDataFrame([(ln,) for ln in lines], "text string")
+    q = LogQuery(show_unique=True)
+    got = cached_report(df, q)["stats"]["unique_messages"]
+    spark_order = matched(df, q).select("msg_key").distinct().orderBy("msg_key")
+    assert got == [r["msg_key"] for r in spark_order.collect()]
+    assert len(got) == len(keys)
 
 
 def test_quantiles_approx_matches_exact_within_tolerance(spark):

@@ -2,13 +2,15 @@
 be visible in the plan, not assumed — pushdown into the parquet scan, column
 pruning, broadcast (not sort-merge) enrich joins, partial aggregation."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from timberjack_spark.fixtures import dim_role_df, dim_tool_df, transcripts_path
 from timberjack_spark.functions.extract import MODES, with_parsed
 from timberjack_spark.functions.patterns import LEVEL_RE, TIMESTAMP_RE
-from timberjack_spark.operators.analyze import LogQuery, matched
+from timberjack_spark.operators.analyze import LogQuery, analyze, matched
 from timberjack_spark.operators.enrich import enrich
 from timberjack_spark.operators.route import with_category
 
@@ -72,6 +74,30 @@ def test_report_spine_stays_in_the_jvm(spark, src):
     plan = plan_of(matched(src, LogQuery(show_unique=True)))
     assert plan.count(LEVEL_RE) == 1
     assert "ArrowEvalPython" not in plan
+
+
+def persisted_spine(src, q):
+    """The column names of the relation ``analyze(cache=True)`` persists, read
+    from the cached plan's InMemoryRelation, plus the plan text."""
+    spine = analyze(src, q, cache=True)["matched"]
+    try:
+        plan = plan_of(spine)
+    finally:
+        spine.unpersist()
+    attrs = re.search(r"InMemoryRelation \[([^\]]*)\]", plan).group(1)
+    return [a.split("#")[0] for a in attrs.split(", ")], plan
+
+
+def test_report_persists_only_the_columns_it_reads(spark, src):
+    # the pipebench report shape: trend().stats(show_unique=True)
+    cols, _ = persisted_spine(src, LogQuery(trends=True, stats=True, show_unique=True))
+    assert sorted(cols) == sorted(["text", "level", "bucket", "error_type", "msg_key"])
+
+
+def test_bare_report_persists_only_the_text(spark, src):
+    cols, plan = persisted_spine(src, LogQuery(trends=False, stats=False))
+    assert cols == ["text"]
+    assert "json_tuple" not in plan
 
 
 def test_aggregation_is_partial_then_final(spark, src):

@@ -57,8 +57,11 @@ def main(argv: list[str] | None = None) -> int:
         print("Error: No input source. Provide a file or pipe data to stdin.", file=sys.stderr)
         return 1
 
+    from dataclasses import replace
+
     from .api import Timber
-    from .operators.analyze import LogQuery, analyze, collect_report, render_text
+    from .operators.analyze import render_text
+    from .operators.filters import parse_field_filters
     from .session import get_spark
 
     cores = 1 if args.sequential else None  # None -> all cores (see session.py)
@@ -84,13 +87,13 @@ def main(argv: list[str] | None = None) -> int:
             print(f"\nWaking LumberJacks...Timberjack is chopping: {args.file}\n")
         t = Timber.read(spark, args.file, fmt=args.format)
 
-    q = LogQuery.from_cli(
+    t = replace(
+        t,
         pattern=args.chop,
-        level=args.level,
-        fields=args.field,
-        mode=t.mode,
+        level_filter=args.level,
+        fields=parse_field_filters(args.field),
         trends=args.trend,
-        stats=args.stats or args.show_unique,
+        stats_on=args.stats or args.show_unique,
         top_errors=args.top_errors,
         show_unique=args.show_unique,
     )
@@ -103,12 +106,11 @@ def main(argv: list[str] | None = None) -> int:
             print(f"Filtering by fields: {args.field}")
 
     if args.count:
-        from .operators.analyze import matched
-
-        print(matched(t.df, q, text_col=t.text_col).count())
+        print(t.count())
         return 0
 
-    doc = collect_report(analyze(t.df, q, text_col=t.text_col), q)
+    # one cached parse feeds every aggregate (Timber.report persists the spine)
+    doc = t.report()
     if args.json:
         print(json.dumps(doc, indent=2))
     else:

@@ -5,7 +5,10 @@ aggregation runs the reference's partial->final merge contract
 (/root/reference/src/analyzer.rs:496-549) natively — counts add map-side,
 partials merge after one shuffle on the group key. Display sorts are part of
 the query (deterministic tie-breaks replace the reference's hash-order
-nondeterminism, SURVEY.md §7.0/§7.3).
+nondeterminism, SURVEY.md §7.0/§7.3), with one exception: the unique-message
+list (K4) is collected in full for display, so the report sorts it on the
+driver (``operators.analyze.collect_report``) instead of paying a range-sort
+sample job and a second exchange of every distinct key.
 """
 
 from __future__ import annotations
@@ -74,8 +77,11 @@ def top_errors(df: DataFrame, n: int = 5) -> DataFrame:
 
 
 def unique_messages(df: DataFrame) -> DataFrame:
-    """A7 (--show-unique)/K4 — distinct unique-message keys, alphabetical."""
-    return df.select(F.col("msg_key").alias("message")).distinct().orderBy("message")
+    """A7 (--show-unique) — distinct unique-message keys, unordered. The K4
+    alphabetical display order is a driver-side ``sorted()`` in
+    ``operators.analyze.collect_report``, which also takes the unique count
+    from the list's length."""
+    return df.select(F.col("msg_key").alias("message")).distinct()
 
 
 def message_stats(df: DataFrame) -> DataFrame:

@@ -2,11 +2,14 @@
 
 ``LogQuery`` is the declarative plan (the analog of the reference's configured
 ``LogAnalyzer``, /root/reference/src/analyzer.rs:86-208); :func:`matched` builds
-the parse+filter spine as one codegen stage; :func:`analyze` hangs every
-requested aggregate off that spine; :func:`collect_report` assembles the
-reference's JSON document shape (/root/reference/src/formatter.rs:7-165) from
-the collected aggregate rows — the only driver-side step, and it only ever
-touches already-aggregated (small) data.
+the parse+filter spine as one codegen stage; :func:`report_frames` hangs every
+requested aggregate off a spine and :func:`analyze` narrows the spine to the
+columns those aggregates read before it does so; :func:`collect_report`
+assembles the reference's JSON document shape
+(/root/reference/src/formatter.rs:7-165) from the collected aggregate rows — the
+only driver-side step, and it only ever touches already-aggregated (small)
+data, plus the distinct message keys under ``--show-unique``, which it counts
+and sorts itself.
 """
 
 from __future__ import annotations
@@ -75,19 +78,14 @@ def matched(df: DataFrame, q: LogQuery, text_col: str = "text") -> DataFrame:
     return parsed.filter(pred)
 
 
-def analyze(
-    df: DataFrame, q: LogQuery, text_col: str = "text", cache: bool = False
-) -> dict[str, DataFrame]:
-    """Run the full analysis; returns lazily-evaluated aggregate DataFrames.
+def report_frames(m: DataFrame, q: LogQuery, text_col: str = "text") -> dict[str, DataFrame]:
+    """Every aggregate the report of ``q`` needs, as lazy DataFrames over the
+    spine ``m`` (returned under ``"matched"``).
 
-    With ``cache=True`` the matched spine is persisted so the N aggregate jobs
-    scan the parsed data once instead of re-reading the source (the right call
-    when the source is remote storage; for a single aggregate leave it off and
-    let the scan stream).
+    With ``show_unique`` the distinct message keys are the only ``msg_key``
+    aggregate: :func:`collect_report` takes the unique count from their list,
+    so no ``message_stats`` frame shuffles the same keys a second time.
     """
-    m = matched(df, q, text_col)
-    if cache:
-        m = m.persist()
     out: dict[str, DataFrame] = {"matched": m, "total": agg.total_count(m)}
     out["line_counts"] = agg.matched_sample(m, text_col)
     if q.trends:
@@ -95,15 +93,60 @@ def analyze(
     if q.stats:
         out["levels"] = agg.level_histogram(m)
         out["top_errors"] = agg.top_errors(m, q.top_errors)
-        out["message_stats"] = agg.message_stats(m)
         if q.show_unique:
             out["unique_messages"] = agg.unique_messages(m)
+        else:
+            out["message_stats"] = agg.message_stats(m)
     return out
+
+
+def analyze(
+    df: DataFrame, q: LogQuery, text_col: str = "text", cache: bool = False
+) -> dict[str, DataFrame]:
+    """Run the full analysis; returns lazily-evaluated aggregate DataFrames.
+
+    The spine is :func:`matched` narrowed to the columns the requested
+    aggregates read: the line, ``bucket`` for trends, and ``level``,
+    ``error_type`` and ``msg_key`` for stats. The filters run before the
+    narrowing, so their inputs (the source's other columns, ``ts_raw``,
+    ``message``) are never kept.
+
+    With ``cache=True`` this narrow spine is persisted, so the N aggregate
+    jobs scan and parse the source once instead of re-reading it (the right
+    call when the source is remote storage; for a single aggregate leave it
+    off and let the scan stream). Persisting only these columns keeps the
+    cache small: the full parse would also hold ``message``, a second copy of
+    the whole line on generic rows.
+
+    ``"matched"`` is the narrow spine, persisted or not; unpersist it when
+    done. A caller that also needs the other columns (routing reads ``role``
+    and ``tool``) persists :func:`matched` itself and calls
+    :func:`report_frames` on it.
+    """
+    cols = [text_col]
+    if q.trends:
+        cols.append("bucket")
+    if q.stats:
+        cols += ["level", "error_type", "msg_key"]
+    spine = matched(df, q, text_col).select(*cols)
+    if cache:
+        spine = spine.persist()
+    return report_frames(spine, q, text_col)
+
+
+def repetition_ratio(unique: int, total: int) -> float:
+    """A8 — ``(1 - unique/total) * 100``, 0.0 on empty input
+    (src/formatter.rs:106-111). The same IEEE double operations as the Spark
+    column of :func:`aggregates.message_stats`, on integers below 2**53, so the
+    two are bit-identical."""
+    return (1.0 - unique / total) * 100.0 if total else 0.0
 
 
 def collect_report(results: dict[str, DataFrame], q: LogQuery) -> dict:
     """Driver-side assembly of the reference's JSON document
-    (src/formatter.rs:7-48): all inputs are small aggregate results."""
+    (src/formatter.rs:7-48): all inputs are small aggregate results, except
+    the distinct message keys, which are collected in full for display anyway
+    and are sorted here (K4; src/formatter.rs:140-146)."""
     total = results["total"].collect()[0]["cnt"]
     doc: dict = {
         "matched_lines": [
@@ -119,8 +162,14 @@ def collect_report(results: dict[str, DataFrame], q: LogQuery) -> dict:
             {"timestamp": r["bucket"], "count": r["cnt"]} for r in results["trends"].collect()
         ]
     if q.stats:
-        ms = results["message_stats"].collect()[0]
-        stats = {
+        keys = None
+        if q.show_unique:
+            # code-point order is Spark's UTF-8 binary string order
+            keys = sorted(r["message"] for r in results["unique_messages"].collect())
+            unique = len(keys)
+        else:
+            unique = results["message_stats"].collect()[0]["unique_cnt"]
+        doc["stats"] = {
             "log_levels": [
                 {"level": r["level"], "count": r["cnt"]} for r in results["levels"].collect()
             ],
@@ -128,15 +177,10 @@ def collect_report(results: dict[str, DataFrame], q: LogQuery) -> dict:
                 {"error_type": r["error_type"], "count": r["cnt"], "rank": r["rank"]}
                 for r in results["top_errors"].collect()
             ],
-            "unique_messages_count": ms["unique_cnt"],
-            "repetition_ratio": ms["repetition_ratio"],
-            "unique_messages": None,
+            "unique_messages_count": unique,
+            "repetition_ratio": repetition_ratio(unique, total),
+            "unique_messages": keys,
         }
-        if q.show_unique:
-            stats["unique_messages"] = [
-                r["message"] for r in results["unique_messages"].collect()
-            ]
-        doc["stats"] = stats
     return doc
 
 
